@@ -7,10 +7,10 @@ caller on ``local[<cores>]``: it calls one registered key, collects its
 result with ``toPandas()`` as ``scripts/driver_sim.py`` does, then calls
 the next key. A run is:
 
-1. JVM launch (reported, not in ``setup_s``), then five set-ups, each a
-   new SparkSession on that JVM, ``session.prep`` (ships the package to
-   Python workers) and the workload's inputs generated from the seed.
-   ``setup_s`` is the median of the five.
+1. the workload's input tables staged from ``fixtures/`` (stage.py) and
+   the JVM launched, both reported and not in ``setup_s``; then seven
+   set-ups, each a new SparkSession on that JVM and ``session.prep``
+   (ships the package to Python workers). ``setup_s`` is their median.
 2. the cold pass: every key once in the fresh session (``cold_pass_s``).
    Its outputs are checked, untimed, against the DuckDB oracles.
 3. one untimed warm-up pass; rows-only keys must hash the same on it as
@@ -45,11 +45,12 @@ import tempfile
 import time
 import traceback
 
-from workloads import SF, WORKLOADS, pass_order
+import stage
+from workloads import WORKLOADS, pass_order
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-SETUPS = 5
+SETUPS = 7
 SHUFFLE_PARTITIONS = 32
 DRIVER_MEMORY = "4g"
 
@@ -244,8 +245,11 @@ class Bench:
         import pyspark
         from trireme_spark import session
 
-        import gen
-
+        t0 = time.perf_counter()
+        self.data_dir = stage.stage(os.path.join(self.work, "data"), self.wl.dup)
+        self.notes.append(
+            f"stage_s {time.perf_counter() - t0:.3f} (not in setup_s)"
+        )
         t0 = time.perf_counter()
         boot = self._session()
         self.notes.append(
@@ -265,19 +269,15 @@ class Bench:
         for i in range(SETUPS):
             if self.spark is not None:
                 self.spark.stop()
-                shutil.rmtree(os.path.dirname(self.data_dir), ignore_errors=True)
-            d = os.path.join(self.work, f"setup{i}")
-            os.makedirs(os.path.join(d, "tmp"))
-            tempfile.tempdir = os.path.join(d, "tmp")  # fresh package zip
+            tmp = os.path.join(self.work, f"setup{i}")
+            os.makedirs(tmp)
+            tempfile.tempdir = tmp  # a fresh package zip each time
             t0 = time.perf_counter()
             spark = self._session()
             session.prep(spark)
-            data = gen.write(
-                os.path.join(d, "data"), SF, self.seed, self.wl.dup
-            )
             times.append(time.perf_counter() - t0)
             self.sessions.append(spark)
-            self.spark, self.data_dir = spark, data
+            self.spark = spark
         return times
 
     # -- key calls ----------------------------------------------------
@@ -307,7 +307,8 @@ class Bench:
                 q.stop()
             msg = f"{key}: {type(exc).__name__}: {str(exc).splitlines()[0][:200]}"
             self.failures.append(msg)
-            rec["error"] = msg
+            # A failed call still costs its time in the pass.
+            rec.update(error=msg, iso_s=t1 - t0, s=time.perf_counter() - t1)
             return rec
         rec["iso_s"] = t1 - t0
         rec["s"] = rec["build_s"] + rec["sink_s"]
@@ -357,7 +358,7 @@ class Bench:
             recs.append(rec)
         return {
             "no": pass_no, "traced": traced, "recs": recs, "outs": outs,
-            "s": sum(r["s"] + r["iso_s"] for r in recs if "error" not in r),
+            "s": sum(r["s"] + r["iso_s"] for r in recs),
         }
 
     # -- correctness --------------------------------------------------
@@ -410,8 +411,8 @@ class Bench:
                 )
 
     def run_probes(self) -> None:
-        """Keys kept out of the loop because they fail: each run calls
-        them once, uncounted, so the failure stays in the output."""
+        """Keys kept out of the loop because they fail: each traced run
+        calls them once, uncounted, so the failure stays in the output."""
         from trireme_spark import registry
 
         for key in self.wl.probes:
@@ -440,16 +441,23 @@ class Bench:
 
             self.tracer = Tracer()
             self.tracer.install()
+        t0 = time.perf_counter()
         setup_times = self.setup()
+        self.notes.append(f"set-up phase wall {time.perf_counter() - t0:.1f} s")
         if traced:
             get_spark_s = self.tracer.durations("session.get_spark")[1:]
             self.tracer.uninstall()
         ticks0 = host_cpu_ticks()
+        marks = [time.perf_counter()]
         cold = self.run_pass(0, keep=set(self.keys))
+        marks.append(time.perf_counter())
         pending, n_oracle = self.check_oracles(cold.pop("outs"))
+        marks.append(time.perf_counter())
         warm = self.run_pass(1, keep=set(pending))  # untimed warm-up
         self.check_repeats(pending, warm["outs"])
+        marks.append(time.perf_counter())
         passes = self._timed(traced)
+        marks.append(time.perf_counter())
         delta = [b - a for a, b in zip(ticks0, host_cpu_ticks())]
         # Time the host gave this machine's CPUs to other machines: wall
         # times from a run with a large share here are not comparable.
@@ -457,7 +465,15 @@ class Bench:
             f"host steal {100 * delta[7] / max(1, sum(delta)):.1f}% of CPU "
             "time during the passes"
         )
-        self.run_probes()
+        if traced:
+            self.run_probes()
+        marks.append(time.perf_counter())
+        self.notes.append("phase wall s: " + " ".join(
+            f"{name} {b - a:.1f}" for name, a, b in zip(
+                ("cold", "oracles", "warm-up", "timed", "probes"),
+                marks, marks[1:],
+            )
+        ))
         self._print_header(cold, passes, n_oracle, len(pending))
         if traced:
             metrics = self._layers(passes, get_spark_s)
@@ -496,7 +512,7 @@ class Bench:
     def _print_header(self, cold, passes, n_oracle: int, n_rows_only: int) -> None:
         wl = self.wl
         dup = f" x{wl.dup}" if wl.dup > 1 else ""
-        print(f"workload {wl.name}: {len(self.keys)} keys, sf {SF}{dup}, "
+        print(f"workload {wl.name}: {len(self.keys)} keys, sf {stage.SF}{dup}, "
               f"toPandas sink, seed {self.seed}, local[{self.cores}], "
               "closed loop, 1 caller")
         print("keys " + " ".join(self.keys))

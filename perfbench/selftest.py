@@ -1,9 +1,10 @@
-"""Quick self-test of the benchmark at sf0.001.
+"""Quick self-test of the benchmark.
 
     python3 perfbench/selftest.py [workload ...]
 
-Runs ``run.py --smoke`` for every workload (or the ones named), untraced
-and traced, each for one second of timed passes, and checks the last line
+Runs ``run.py --seconds 1`` for every workload (or the ones named),
+untraced and traced, so each run makes the fewest timed passes it allows
+(two, or two of each kind when traced), and checks the last line
 of each run: exactly the keys ``correct``, ``attempted``, ``failed`` and
 ``metrics``; a correct result with no failures; and every metric that
 BENCHMARK.json lists for that mode, with its unit and a finite value.

@@ -2,8 +2,8 @@
 
 Every workload is a single caller in a closed loop: it calls one
 registered key, waits until its result is collected, then calls the next.
-The seed picks the generated data and the order of keys within each
-timed pass.
+The seed picks the order of keys within each timed pass; the tables are
+the sf0.01 fixtures (stage.py), staged as they are or duplicated.
 """
 
 from __future__ import annotations
@@ -11,15 +11,11 @@ from __future__ import annotations
 import random
 from dataclasses import dataclass
 
-# Scale factor of the generated tables for every workload.
-SF = 0.001
-
-
 @dataclass(frozen=True)
 class Workload:
     name: str
     keys: tuple          # registered keys, one call each per pass
-    dup: int = 1         # >1: generate that many id-shifted copies
+    dup: int = 1         # >1: stage that many id-shifted copies
     probes: tuple = ()   # keys called once outside the loop, never counted
 
 
@@ -33,18 +29,22 @@ def pass_order(keys: list[str], name: str, seed: int, pass_no: int) -> list[str]
 
 
 WORKLOADS = {w.name: w for w in (
-    # Plan build: one key from each of six families, each about 0.3 s
-    # warm at sf0.01, plus a real micro-batch replay with a state store.
-    # The replay that fails from outside the package root is a probe.
+    # Plan build: one key from each of four families, each about 0.2 s
+    # warm at sf0.01; k-means and connected components, whose rounds are
+    # driven from the driver; a real micro-batch replay with a state
+    # store. The replay that fails from outside the package root is a
+    # probe.
     Workload(name="sweep", keys=(
-        "agg_corr_matrix", "events_attribution_linear",
-        "etl_merge_cdc_apply", "join_interval", "udf_python",
-        "sim_knn_filtered", "stream_complete_mode",
+        "agg_corr_matrix", "events_attribution_linear", "udf_python",
+        "sim_knn_filtered", "cluster_kmeans_fit",
+        "dedup_connected_components", "stream_complete_mode",
     ), probes=("stream_python_datasource",)),
-    # Execution: x10 id-shifted copies of each id-keyed table; exact
-    # sums, basket pairs, k-means rounds and connected components.
-    Workload(name="dup10", dup=10, keys=(
+    # Execution at about sf0.5 (74 MB): 50 id-shifted copies of each
+    # id-keyed sf0.01 table. Exact sums, basket pairs, a funnel over
+    # events and n-gram matching over documents; each key builds in
+    # about 0.1 s and executes for 0.5-1.5 s.
+    Workload(name="dup10", dup=50, keys=(
         "agg_pricing_summary", "lineitem_market_basket",
-        "cluster_kmeans_fit", "dedup_connected_components",
+        "events_funnel", "text_decontaminate",
     )),
 )}
