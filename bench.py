@@ -18,6 +18,7 @@ per-key 2x gate consumes.
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import time
@@ -75,6 +76,7 @@ def main() -> None:
         # key's own warmup run refills its cache, so steady-state timing
         # still measures the warm-cache plan.
         spark.catalog.clearCache()
+        gc.collect()  # release the previous key's localCheckpoint refs
         # The warmup run is also timed and reported as first_run_sec
         # (r15, reporting honesty): it includes codegen, Arrow init and
         # any intra-query cache FILL, so cache_once keys cannot hide the

@@ -162,6 +162,50 @@ def test_python_sink_commit_protocol(spark, tmp_path):
     ]
 
 
+def test_python_stream_source_outside_repo_root(tmp_path):
+    """stream_python_datasource from a caller that is not in the repo
+    root and has no PYTHONPATH, the way an external driver loads
+    __spark_entry__.py by path. Spark's Python streaming-source planner
+    never sees the addPyFile zip, so the source classes must pickle by
+    value or the planner fails with "No module named 'trireme_spark'"."""
+    import subprocess
+    import sys
+    import textwrap
+
+    entry = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "__spark_entry__.py",
+    )
+    script = textwrap.dedent(
+        f"""
+        import importlib.util
+
+        spec = importlib.util.spec_from_file_location("__spark_entry__", {entry!r})
+        e = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(e)
+        from trireme_spark.session import get_spark
+
+        spark = get_spark("pds-outside-root", cpus=2, driver_memory="1g")
+        try:
+            df = e.queries()["stream_python_datasource"](spark, {SF_SMOKE!r})
+            print("ROWS", df.count())
+        finally:
+            spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        cwd=tmp_path,
+        env=env,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "ROWS 10" in out.stdout.splitlines()
+
+
 def test_staging_dir_is_per_process():
     """r5 ADVICE: staging paths must differ across processes (concurrent
     sessions must never share a mid-overwrite path) and stay stable

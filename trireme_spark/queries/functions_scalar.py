@@ -2206,13 +2206,12 @@ def fn_ipv4_cidr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# fn_iban_mod97 — STAGED for the r14 cadence (parked unregistered;
-# SURVEY round-12 log). ISO 7064 MOD-97-10 check-digit computation and
-# validation on synthesized DE IBANs — the banking sibling of
-# fn_luhn_checksum (cards): the rearranged digit string is a 22-digit
-# integer, far past 2^63, so the mod folds CHUNKWISE via the identity
-# (a·10^k + b) mod 97 = ((a mod 97)·(10^k mod 97) + b) mod 97 — pure
-# bounded integer arithmetic, no big-int type needed in either engine.
+# fn_iban_mod97 — ISO 7064 MOD-97-10 check-digit computation and validation
+# on synthesized DE IBANs — the banking sibling of fn_luhn_checksum
+# (cards): the rearranged digit string is a 22-digit integer, far past
+# 2^63, so the mod folds CHUNKWISE via the identity (a·10^k + b) mod 97 =
+# ((a mod 97)·(10^k mod 97) + b) mod 97 — pure bounded integer arithmetic,
+# no big-int type needed in either engine.
 # ---------------------------------------------------------------------------
 
 # 10^6 mod 97 (the BBAN·10^6 fold step) and the digitized country code:

@@ -555,12 +555,11 @@ def geo_geohash_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# geo_point_in_polygon — STAGED for the r14 cadence (parked unregistered;
-# SURVEY round-13 log). Ray-casting point-in-polygon over the planted
+# geo_point_in_polygon — Ray-casting point-in-polygon over the planted
 # customer coordinates against a FIXED literal polygon: the geofencing
 # primitive (service areas, sanctioned regions, delivery zones) the geo
-# family was missing — the radius join answers "near a point", this
-# answers "inside a shape".
+# family was missing — the radius join answers "near a point", this answers
+# "inside a shape".
 # ---------------------------------------------------------------------------
 
 # (lat, lon) vertices, counter-clockwise, closed implicitly. A literal

@@ -2119,15 +2119,14 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# graph_bipartite_hits — STAGED for the r14 cadence (parked unregistered;
-# SURVEY round-12 log). HITS (Kleinberg 1999) on the bipartite
-# customer→part purchase graph, 3 unrolled iterations: authorities =
-# parts bought by the best hub-customers, hubs = customers who buy the
-# best authority-parts — the mutually-recursive centrality PageRank's
-# single-score random walk cannot express, and the classic
-# query-dependent ranking primitive. L1 normalization per half-step
-# (a documented HITS variant — same fixed point direction as L2, and
-# expressible as exact integer arithmetic cross-engine).
+# graph_bipartite_hits — HITS (Kleinberg 1999) on the bipartite
+# customer→part purchase graph, 3 unrolled iterations: authorities = parts
+# bought by the best hub-customers, hubs = customers who buy the best
+# authority-parts — the mutually-recursive centrality PageRank's
+# single-score random walk cannot express, and the classic query-dependent
+# ranking primitive. L1 normalization per half-step (a documented HITS
+# variant — same fixed point direction as L2, and expressible as exact
+# integer arithmetic cross-engine).
 # ---------------------------------------------------------------------------
 
 _HITS_ITERS = 3

@@ -3245,16 +3245,15 @@ def text_log_odds_dirichlet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# text_compression_quality — STAGED for the r14 cadence (parked
-# unregistered; SURVEY round-12 log). zlib compressibility as a document
-# quality signal: highly compressible text is repetitive/boilerplate
-# (template spam, keyword stuffing, machine-generated filler) — the
-# cheap, language-agnostic curation filter every large-corpus pipeline
-# runs next to the Gopher rules (text_quality_gopher) and exactly the
-# signal the repetition keys (text_dedup_repeated_spans,
-# text_template_detect) approximate lexically. ROWS-ONLY at flip: DuckDB
-# has no zlib, so the contract is the pytest identity against Python's
-# own zlib (same library, exact equality) plus determinism and bounds.
+# text_compression_quality — zlib compressibility as a document quality
+# signal: highly compressible text is repetitive/boilerplate (template
+# spam, keyword stuffing, machine-generated filler) — the cheap,
+# language-agnostic curation filter every large-corpus pipeline runs next
+# to the Gopher rules (text_quality_gopher) and exactly the signal the
+# repetition keys (text_dedup_repeated_spans, text_template_detect)
+# approximate lexically. ROWS-ONLY: DuckDB has no zlib, so the contract is
+# the pytest identity against Python's own zlib (same library, exact
+# equality) plus determinism and bounds.
 # ---------------------------------------------------------------------------
 
 _COMP_LEVEL = 6  # zlib default-ish level, pinned

@@ -13,11 +13,22 @@ for the remote system exactly like the multimodal/PII plantings.
 
 from __future__ import annotations
 
+import sys
+
+from pyspark import cloudpickle
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     InputPartition,
 )
+
+# Ship this module's classes by value. Spark's Python streaming-source
+# planner runs in a worker that never sees the addPyFile zip, so
+# pickling them by reference fails with "No module named
+# 'trireme_spark'" whenever the caller's cwd is outside the repo root.
+# By-value pickling needs every import here to resolve on a bare worker,
+# so this module may import only pyspark and the standard library.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 _KNUTH = 2654435761
 _M31 = 2147483648
