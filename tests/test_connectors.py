@@ -162,12 +162,10 @@ def test_python_sink_commit_protocol(spark, tmp_path):
     ]
 
 
-def test_python_stream_source_outside_repo_root(tmp_path):
-    """stream_python_datasource from a caller that is not in the repo
-    root and has no PYTHONPATH, the way an external driver loads
-    __spark_entry__.py by path. Spark's Python streaming-source planner
-    never sees the addPyFile zip, so the source classes must pickle by
-    value or the planner fails with "No module named 'trireme_spark'"."""
+def _run_outside_repo_root(tmp_path, body):
+    """Run ``body`` in a fresh interpreter whose cwd is ``tmp_path`` and
+    which has no PYTHONPATH, the way an external driver loads
+    __spark_entry__.py by path; the body sees that module as ``e``."""
     import subprocess
     import sys
     import textwrap
@@ -183,16 +181,8 @@ def test_python_stream_source_outside_repo_root(tmp_path):
         spec = importlib.util.spec_from_file_location("__spark_entry__", {entry!r})
         e = importlib.util.module_from_spec(spec)
         spec.loader.exec_module(e)
-        from trireme_spark.session import get_spark
-
-        spark = get_spark("pds-outside-root", cpus=2, driver_memory="1g")
-        try:
-            df = e.queries()["stream_python_datasource"](spark, {SF_SMOKE!r})
-            print("ROWS", df.count())
-        finally:
-            spark.stop()
         """
-    )
+    ) + textwrap.dedent(body)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     out = subprocess.run(
         [sys.executable, "-c", script],
@@ -203,7 +193,54 @@ def test_python_stream_source_outside_repo_root(tmp_path):
         timeout=600,
     )
     assert out.returncode == 0, out.stderr[-3000:]
-    assert "ROWS 10" in out.stdout.splitlines()
+    return out.stdout.splitlines()
+
+
+def test_python_stream_source_outside_repo_root(tmp_path):
+    """stream_python_datasource from a caller that is not in the repo
+    root and has no PYTHONPATH. Spark's Python streaming-source planner
+    never sees the addPyFile zip, so the source classes must pickle by
+    value or the planner fails with "No module named 'trireme_spark'"."""
+    out = _run_outside_repo_root(
+        tmp_path,
+        f"""
+        from trireme_spark.session import get_spark
+
+        spark = get_spark("pds-outside-root", cpus=2, driver_memory="1g")
+        try:
+            df = e.queries()["stream_python_datasource"](spark, {SF_SMOKE!r})
+            print("ROWS", df.count())
+        finally:
+            spark.stop()
+        """,
+    )
+    assert "ROWS 10" in out
+
+
+def test_restarted_session_ships_package_outside_repo_root(tmp_path):
+    """A session started after another was stopped in the same process
+    gets the package zip too: its workers can run a UDF that pickles by
+    reference into the package (udf_python). The shipped-set holds the
+    live SparkContexts, which a restarted session never shares; an
+    id(spark) key could be reused and skip the new session's addPyFile."""
+    out = _run_outside_repo_root(
+        tmp_path,
+        f"""
+        from trireme_spark.session import get_spark, prep
+
+        spark = get_spark("restart-1", cpus=2, driver_memory="1g")
+        prep(spark)
+        spark.stop()
+        spark = get_spark("restart-2", cpus=2, driver_memory="1g")
+        try:
+            prep(spark)
+            rows = e.queries()["udf_python"](spark, {SF_SMOKE!r}).collect()
+            print("ROWS", len(rows), "PRIOS", sorted({{r.prio for r in rows}}))
+        finally:
+            spark.stop()
+        """,
+    )
+    assert "ROWS 1500 PRIOS [1, 2, 3, 4, 5]" in out
 
 
 def test_staging_dir_is_per_process():

@@ -14,6 +14,8 @@ the semantics are not expressible in built-ins; they are Arrow/pandas
 vectorized, never row-at-a-time in hot paths.
 
 Layout:
+  _zipimport.py — stat-checked zipimport cache invalidation for Python
+                 workers (< 3.13); imported first, see its docstring
   session.py   — pinned SparkSession factory + runtime prep for foreign sessions
   registry.py  — (key → query fn, key → oracle SQL) registry; the driver
                  contract surface consumed by __spark_entry__.py
@@ -29,6 +31,7 @@ Layout:
                  registers every query key
 """
 
+from trireme_spark import _zipimport  # noqa: F401  (first: worker import cost)
 from trireme_spark import registry  # noqa: F401
 from trireme_spark import queries  # noqa: F401  (side-effect: registers keys)
 

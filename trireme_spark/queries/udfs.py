@@ -32,11 +32,17 @@ FROM orders
 """
 
 
+def _leading_digit(s: str) -> int:
+    return int(s[0])
+
+
 @register("udf_python", oracle=_X1_ORACLE)
 def udf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x1 — row-scalar Python UDF ('1-URGENT' → 1). Row-at-a-time pickling;
-    kept off every hot path — see x2 for the vectorized form."""
-    prio = F.udf(lambda s: int(s[0]), IntegerType())
+    kept off every hot path — see x2 for the vectorized form. The function
+    lives at module level so it pickles by reference: a worker imports the
+    package to run it, which installs the zipimport shim there."""
+    prio = F.udf(_leading_digit, IntegerType())
     o = table(spark, sf_dir, "orders")
     return o.select("o_orderkey", prio("o_orderpriority").alias("prio"))
 

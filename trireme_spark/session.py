@@ -22,6 +22,7 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
+import weakref
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -80,7 +81,12 @@ def prep(spark: SparkSession) -> SparkSession:
     return spark
 
 
-_SHIPPED: set[int] = set()
+# The live SparkContexts the package zip was added to. An id(spark) key
+# would outlive its session: a restarted session could reuse the id and
+# then never ship the package to its new workers. A weak set forgets a
+# context with its session and, unlike an applicationId key, costs no
+# py4j round trip in prep().
+_SHIPPED = weakref.WeakSet()
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -93,7 +99,8 @@ def _ship_package(spark: SparkSession) -> None:
     is content-hashed so edits during one Python process get a fresh file,
     and re-adding the same name to a live session is a no-op.
     """
-    if id(spark) in _SHIPPED:
+    sc = spark.sparkContext
+    if sc in _SHIPPED:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     members = []
@@ -118,5 +125,5 @@ def _ship_package(spark: SparkSession) -> None:
                 )
                 zf.write(path, arcname)
         os.replace(tmp, zpath)
-    spark.sparkContext.addPyFile(zpath)
-    _SHIPPED.add(id(spark))
+    sc.addPyFile(zpath)
+    _SHIPPED.add(sc)
